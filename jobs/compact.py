@@ -10,8 +10,15 @@ Usage:
 At cluster scale the same script runs unchanged on N or 4N executors:
 parallelism comes from spark.sql.shuffle.partitions and the input split
 count, work distribution from the deterministic partition buckets
-(lineage.py). A killed run re-submitted with the same --run-id replays
-only unfinished buckets.
+(lineage.py).
+
+Resume: a killed run re-submitted with the same --run-id redoes only what
+had not committed. Blocks resume per partition bucket through the
+lineage table. Each tier and ``raw_hot`` is written whole and then
+committed by a stage row in the metrics table (stage ``tier_<name>`` or
+``raw_hot``, see lineage.py); a rerun skips every committed stage. A
+crash between a write and its stage row only repeats that idempotent
+overwrite. A run without --run-id gets a fresh id, so it redoes all.
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ import argparse
 import os
 import sys
 import time
+import uuid
 
 # allow running without --py-files when launched from the repo checkout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,9 +50,13 @@ def main(argv: list[str] | None = None) -> None:
 
     from tersets_spark.methods import Method
     from tersets_spark.operators.compress import compress_blocks
-    from tersets_spark.operators.lineage import append_metrics, run_with_lineage
+    from tersets_spark.operators.lineage import (
+        append_metrics,
+        read_done_stages,
+        run_with_lineage,
+    )
     from tersets_spark.operators.retention import split_aged
-    from tersets_spark.operators.rollup import TIERS, tier_rollups
+    from tersets_spark.operators.rollup import TIERS, rollup_tokens_base, tiers_from_base
     from tersets_spark.session import get_spark
     from tersets_spark.sources.synth import synth_tokens
 
@@ -56,6 +68,9 @@ def main(argv: list[str] | None = None) -> None:
     }[args.method]
     spark = get_spark("tersets_compact", cores=args.cores)
     t0 = time.time()
+    run_id = args.run_id or uuid.uuid4().hex[:12]
+    metrics_path = f"{args.out}/metrics"
+    done = read_done_stages(spark, metrics_path, run_id)
     df = (
         spark.read.parquet(args.input)
         if args.input
@@ -63,31 +78,57 @@ def main(argv: list[str] | None = None) -> None:
     )
     tiers = {t: TIERS[t] for t in args.tiers.split(",")}
 
-    # 1) tier rollups (written whole; cheap relative to compression)
-    for name, roll in tier_rollups(df, tiers).items():
-        roll.write.mode("overwrite").parquet(f"{args.out}/tier_{name}")
+    def write_stage(stage: str, out) -> None:
+        """Write one whole output, then commit it with its stage row."""
+        started = time.time()
+        out.write.mode("overwrite").parquet(f"{args.out}/{stage}")
+        append_metrics(
+            spark,
+            metrics_path,
+            [
+                {
+                    "run_id": run_id,
+                    "stage": stage,
+                    "wall_ms": int((time.time() - started) * 1000),
+                    "parallelism": spark.sparkContext.defaultParallelism,
+                }
+            ],
+        )
+
+    # 1) tier rollups: the finest tier is the one Python pass; every
+    # coarser tier re-aggregates it from the cache
+    pending = [t for t in tiers if f"tier_{t}" not in done]
+    if pending:
+        base = rollup_tokens_base(df, min(tiers.values())).persist()
+        try:
+            rolls = tiers_from_base(base, tiers)
+            for name in pending:
+                write_stage(f"tier_{name}", rolls[name])
+        finally:
+            base.unpersist()
 
     # 2) retention split + block compaction, bucketed with lineage/resume
     kept, aged = split_aged(df, args.raw_retention)
-    kept.write.mode("overwrite").parquet(f"{args.out}/raw_hot")
+    if "raw_hot" not in done:
+        write_stage("raw_hot", kept)
 
     def process(bucket_df):
         return compress_blocks(bucket_df.select("doc_id", "tokens"), method)
 
-    run_id = run_with_lineage(
+    run_with_lineage(
         spark,
         aged,
         process,
         out_path=f"{args.out}/blocks",
         lineage_path=f"{args.out}/lineage",
-        run_id=args.run_id,
+        run_id=run_id,
         n_buckets=args.n_buckets,
     )
     wall = time.time() - t0
     total_tokens = df.agg(F.sum("n_tok")).collect()[0][0] or 0
     append_metrics(
         spark,
-        f"{args.out}/metrics",
+        metrics_path,
         [
             {
                 "run_id": run_id,

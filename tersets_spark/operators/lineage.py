@@ -10,9 +10,19 @@ sizes and retries (never Spark's physical partition id, which is not).
 The orchestrator processes buckets in driver-side batches; each batch is
 one distributed job that (1) writes its output parquet with dynamic
 partition overwrite (idempotent on retry) and (2) appends one lineage
-row per bucket only after the write commits. A killed run leaves
-``status='done'`` rows only for committed buckets; the next run
-anti-joins them away and replays the rest.
+row per bucket, an empty one included, only after the write commits.
+A killed run leaves ``status='done'`` rows only for committed buckets;
+the next run anti-joins them away and replays the rest.
+
+Metrics rows double as stage commits: a job that writes whole outputs
+(jobs/compact.py's tiers and ``raw_hot``) appends one ``METRICS_SCHEMA``
+row per output after its write commits, with the output's name in
+``stage``; ``read_done_stages`` returns those names for a run id, and the
+next run with that id skips them.
+
+Both tables take their rows through Arrow (``_rows_df``): a one-row
+``createDataFrame(list)`` would start a Python worker just to unpickle
+it, which costs about a second the first time in a session.
 """
 
 from __future__ import annotations
@@ -20,7 +30,8 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -33,6 +44,11 @@ METRICS_SCHEMA = (
     "run_id string, stage string, tokens_per_sec double, compress_ratio double, "
     "wall_ms long, parallelism int"
 )
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+#: lineage stats of a bucket with no input rows
+_EMPTY_BUCKET = Row(dmin=None, dmax=None, n_series=0, n_tokens=0)
 
 
 def with_partition_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -47,7 +63,6 @@ def read_done_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> se
             spark.read.parquet(lineage_path)
             .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
             .select("partition_id")
-            .distinct()
             .collect()
         )
     except Exception:  # first run: lineage table absent
@@ -55,20 +70,44 @@ def read_done_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> se
     return {r.partition_id for r in rows}
 
 
+def read_done_stages(spark: SparkSession, metrics_path: str, run_id: str) -> set[str]:
+    """Stages with a metrics row for ``run_id``: outputs whose write has
+    committed."""
+    try:
+        rows = (
+            spark.read.parquet(metrics_path)
+            .filter(F.col("run_id") == run_id)
+            .select("stage")
+            .collect()
+        )
+    except AnalysisException:  # first run: metrics table absent
+        return set()
+    return {r.stage for r in rows}
+
+
+def _rows_df(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """``rows`` as a DataFrame of schema ``ddl``, built from an Arrow
+    table so no Python worker starts. Missing keys are null; naive
+    datetimes are UTC, as ``_ts`` makes them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def append_lineage(spark: SparkSession, lineage_path: str, rows: list[dict]) -> None:
     if not rows:
         return
-    spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(
-        lineage_path
-    )
+    _rows_df(spark, rows, LINEAGE_SCHEMA).write.mode("append").parquet(lineage_path)
 
 
 def append_metrics(spark: SparkSession, metrics_path: str, rows: list[dict]) -> None:
     if not rows:
         return
-    spark.createDataFrame(rows, schema=METRICS_SCHEMA).write.mode("append").parquet(
-        metrics_path
-    )
+    _rows_df(spark, rows, METRICS_SCHEMA).write.mode("append").parquet(metrics_path)
 
 
 def run_with_lineage(
@@ -89,51 +128,57 @@ def run_with_lineage(
     Returns the run_id.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    work = with_partition_bucket(df, n_buckets)
-    done = read_done_buckets(spark, lineage_path, run_id)
-    pending = [b for b in range(n_buckets) if b not in done]
-    for i in range(0, len(pending), buckets_per_batch):
-        batch = pending[i : i + buckets_per_batch]
-        started = time.time()
-        slice_df = work.filter(F.col("pb").isin(batch))
-        out = process_fn(slice_df)
-        if "pb" not in out.columns:
-            out = with_partition_bucket(out, n_buckets)
-        out.write.mode("overwrite").partitionBy("pb").parquet(out_path)
-        # lineage rows reflect what was just committed
-        stats = (
-            slice_df.groupBy("pb")
-            .agg(
-                F.min("doc_id").alias("dmin"),
-                F.max("doc_id").alias("dmax"),
-                F.count("*").alias("n_series"),
-                F.sum(F.coalesce(F.col("n_tok"), F.lit(0)).cast("long")).alias(
-                    "n_tokens"
-                ),
+    prev_mode = spark.conf.get(_OVERWRITE_MODE)
+    spark.conf.set(_OVERWRITE_MODE, "dynamic")
+    try:
+        work = with_partition_bucket(df, n_buckets)
+        done = read_done_buckets(spark, lineage_path, run_id)
+        pending = [b for b in range(n_buckets) if b not in done]
+        for i in range(0, len(pending), buckets_per_batch):
+            batch = pending[i : i + buckets_per_batch]
+            started = time.time()
+            slice_df = work.filter(F.col("pb").isin(batch))
+            out = process_fn(slice_df)
+            if "pb" not in out.columns:
+                out = with_partition_bucket(out, n_buckets)
+            out.write.mode("overwrite").partitionBy("pb").parquet(out_path)
+            # lineage rows reflect what was just committed; a bucket
+            # with no rows commits too, or every resume would replay it
+            stats = dict.fromkeys(batch, _EMPTY_BUCKET) | {
+                int(r.pb): r
+                for r in slice_df.groupBy("pb")
+                .agg(
+                    F.min("doc_id").alias("dmin"),
+                    F.max("doc_id").alias("dmax"),
+                    F.count("*").alias("n_series"),
+                    F.sum(F.coalesce(F.col("n_tok"), F.lit(0)).cast("long")).alias(
+                        "n_tokens"
+                    ),
+                )
+                .collect()
+            }
+            now = time.time()
+            append_lineage(
+                spark,
+                lineage_path,
+                [
+                    {
+                        "run_id": run_id,
+                        "partition_id": b,
+                        "doc_id_min": r.dmin,
+                        "doc_id_max": r.dmax,
+                        "n_series": int(r.n_series),
+                        "n_tokens": int(r.n_tokens or 0),
+                        "out_bytes": None,
+                        "status": "done",
+                        "started_ts": _ts(started),
+                        "finished_ts": _ts(now),
+                    }
+                    for b, r in stats.items()
+                ],
             )
-            .collect()
-        )
-        now = time.time()
-        append_lineage(
-            spark,
-            lineage_path,
-            [
-                {
-                    "run_id": run_id,
-                    "partition_id": int(r.pb),
-                    "doc_id_min": r.dmin,
-                    "doc_id_max": r.dmax,
-                    "n_series": int(r.n_series),
-                    "n_tokens": int(r.n_tokens or 0),
-                    "out_bytes": None,
-                    "status": "done",
-                    "started_ts": _ts(started),
-                    "finished_ts": _ts(now),
-                }
-                for r in stats
-            ],
-        )
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, prev_mode)
     return run_id
 
 

@@ -102,13 +102,21 @@ def tier_rollups(df: DataFrame, tiers: dict[str, int] | None = None) -> dict[str
     JVM-side re-aggregation of the previous one (widths must nest, as
     1m/1h/1d do)."""
     tiers = dict(tiers or TIERS)
+    return tiers_from_base(rollup_tokens_base(df, min(tiers.values())), tiers)
+
+
+def tiers_from_base(base: DataFrame, tiers: dict[str, int]) -> dict[str, DataFrame]:
+    """The tiers of ``tier_rollups`` from an already computed base
+    rollup (``ROLLUP_SCHEMA`` rows at the finest width in ``tiers``).
+    A caller that writes several tiers can persist ``base`` once, so the
+    Python pass runs once instead of once per tier."""
     names = sorted(tiers, key=tiers.get)
     widths = [tiers[n] for n in names]
     for a, b in zip(widths, widths[1:]):
         if b % a:
             raise ValueError(f"tier widths must nest: {b} % {a} != 0")
     out: dict[str, DataFrame] = {}
-    cur = rollup_tokens_base(df, widths[0])
+    cur = base
     out[names[0]] = cur
     for prev_w, name, w in zip(widths, names[1:], widths[1:]):
         cur = reaggregate(cur, w // prev_w)
